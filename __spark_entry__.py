@@ -41,6 +41,7 @@ from pdf_parser_spark.operators import (
 )
 from pdf_parser_spark.operators.text_stats import _LANG_MARKERS
 from pdf_parser_spark.pipeline import extract_with_fallback, reassemble, run_extraction
+from pdf_parser_spark.sources import TRANSCRIPT_SPARK_SCHEMA, read_payload
 
 ORACLE_SF_DIR = "/root/testdata/sf0.01"  # the driver's correctness sf
 SEP = "\x1f"
@@ -49,25 +50,20 @@ SEP = "\x1f"
 # Per-row-compute-heavy tables (shingling, hashing, regex cascades, vector
 # kernels run at scan speed over these). Parquet scan parallelism is bounded
 # by row-group count; at bench scale each is ONE sub-MB file = one row group
-# = one task, serializing the whole map side on a single core. The same
-# balancing policy the extraction path uses (pipeline.scan_plan) applies:
-# when even floor-sized splits cannot fill one wave, ONE explicit
-# repartition beats 31 idle cores; at production scale scan_plan returns
-# salt=False by construction and the read stays shuffle-free.
+# = one task, serializing the whole map side on a single core. They are read
+# through the extraction path's scan policy (sources.read_payload): when even
+# floor-sized splits cannot fill one wave, ONE explicit repartition beats 31
+# idle cores; at production scale the salt is False by construction and the
+# read stays shuffle-free.
 _PAYLOAD_TABLES = frozenset({"documents", "embeddings"})
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     p = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(p)
-    if name in _PAYLOAD_TABLES:
-        from pdf_parser_spark.pipeline import scan_plan
-
-        cpus = spark.sparkContext.defaultParallelism
-        _split, salt = scan_plan(p, cpus)
-        if salt:
-            df = df.repartition(cpus)
-    return df
+    if name not in _PAYLOAD_TABLES:
+        return spark.read.parquet(p)
+    df, salt = read_payload(spark, p)
+    return df.repartition(spark.sparkContext.defaultParallelism) if salt else df
 
 
 def _cents(col) -> Column:
@@ -122,11 +118,7 @@ def q_fallback_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fallback replan (§4.1): second extraction pass over failed rows as a
     filter → rescue-kernel → unionByName plan; vs the single-pass golden
     run with cfg.fallback_plain=True."""
-    from pdf_parser_spark.pipeline import job_session, scan_plan
-
-    p = G.ensure_transcripts(sf_dir)
-    split, salt = scan_plan(p, spark.sparkContext.defaultParallelism)
-    df = job_session(spark, split).read.parquet(p)
+    df, salt = read_payload(spark, G.ensure_transcripts(sf_dir), TRANSCRIPT_SPARK_SCHEMA)
     out = reassemble(extract_with_fallback(df, salt=salt), num_partitions=16)
     return out.select(
         "conv_id", "turn_idx", "role", "tool", "payload_kind", "extracted_text",
@@ -153,19 +145,14 @@ def q_d4_nms_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transcripts corpus with the job's scan policy (pipeline.scan_plan):
+    """Transcripts corpus with the job's scan policy (sources.read_payload):
     adaptive split sizing, applied through a per-job session so the
-    caller's conf is untouched. Split sizing ONLY — no repartition here: a
-    pre-kernel repartition would embed an Exchange into EVERY branch
-    derived from this df (e.g. the fallback rescue join's source re-scan
-    would pay a payload shuffle it never needs); operators that want the
-    balancing shuffle ask for it on their kernel branch alone
-    (extract_turns/extract_with_fallback salt)."""
-    from pdf_parser_spark.pipeline import job_session, scan_plan
-
-    p = G.ensure_transcripts(sf_dir)
-    split, _salt = scan_plan(p, spark.sparkContext.defaultParallelism)
-    return job_session(spark, split).read.parquet(p)
+    caller's conf is untouched. Split sizing ONLY — the salt verdict is
+    dropped: a pre-kernel repartition would embed an Exchange into EVERY
+    branch derived from this df (e.g. the fallback rescue join's source
+    re-scan would pay a payload shuffle it never needs)."""
+    df, _salt = read_payload(spark, G.ensure_transcripts(sf_dir), TRANSCRIPT_SPARK_SCHEMA)
+    return df
 
 
 def q_image_records_full(spark: SparkSession, sf_dir: str) -> DataFrame:

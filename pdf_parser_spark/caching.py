@@ -18,7 +18,7 @@ is the same lifecycle connected_components applies to its per-iteration
 checkpoints, lifted to the operators whose persists escape the call.
 
 The registry is guarded by a lock: concurrent jobs in one application may
-build operator plans from different threads (see ``pipeline.job_session``).
+build operator plans from different threads (see ``sources.read_payload``).
 """
 from __future__ import annotations
 

@@ -35,7 +35,6 @@ __all__ = [
     "decode_image_ex",
     "decode_image_status",
     "resize_nearest",
-    "perceptual_similarity",
     "perceptual_keep_mask",
 ]
 
@@ -154,22 +153,16 @@ def resize_nearest(rgb: np.ndarray, size: int = 32) -> np.ndarray:
     return rgb[ys][:, xs]
 
 
-def perceptual_similarity(a: np.ndarray, b: np.ndarray, size: int = 32) -> float:
-    """D3 similarity: 1 - (fraction of differing pixels) after resize —
-    the numpy analog of ``ImageChops.difference`` + nonzero count
-    (``pdfplumber/pdf_image_extractor_improved.py:22-59``)."""
-    ra = resize_nearest(a, size).astype(np.int16)
-    rb = resize_nearest(b, size).astype(np.int16)
-    diff = (np.abs(ra - rb) > 0).any(axis=-1)
-    return 1.0 - float(diff.mean())
-
-
 def perceptual_keep_mask(
     arrays: list[np.ndarray], sim_threshold: float = 0.9, size: int = 32
 ) -> np.ndarray:
     """Sequential first-wins perceptual dedup within one group: image i is
     dropped if similar (>= threshold) to ANY earlier kept image — matching
-    the reference's loop order (``pdf_image_extractor_improved.py:261-270``)."""
+    the reference's loop order (``pdf_image_extractor_improved.py:261-270``).
+
+    D3 similarity is 1 - (fraction of differing pixels) after resize — the
+    numpy analog of ``ImageChops.difference`` + nonzero count
+    (``pdfplumber/pdf_image_extractor_improved.py:22-59``)."""
     n = len(arrays)
     keep = np.ones(n, dtype=bool)
     small = [resize_nearest(a, size).astype(np.int16) for a in arrays]

@@ -389,6 +389,25 @@ def _stream_of(body: bytes) -> bytes:
     return body[i + len(b"stream\n"): j]
 
 
+# Largest inflated ObjStm / xref stream accepted. Far above what a writer
+# emits for one document; a stream that inflates past it is a zlib bomb,
+# i.e. a malformed file, not a reason to exhaust the worker's memory.
+_MAX_INFLATE = 64 << 20
+
+
+def _inflate(body: bytes, what: str) -> bytes:
+    d = zlib.decompressobj()
+    try:
+        raw = d.decompress(_stream_of(body), _MAX_INFLATE)
+    except zlib.error as e:
+        raise PdfParseError(f"bad {what} stream: {e}") from e
+    if not d.eof:
+        if len(raw) >= _MAX_INFLATE:
+            raise PdfParseError(f"{what} stream inflates past {_MAX_INFLATE} bytes")
+        raise PdfParseError(f"bad {what} stream: truncated")
+    return raw
+
+
 def _unpack_object_streams(objs: dict[int, bytes], offs: dict[int, int]) -> None:
     """PDF 1.5 ``/Type /ObjStm`` unpacking (spec §7.5.7), in place.
 
@@ -405,10 +424,7 @@ def _unpack_object_streams(objs: dict[int, bytes], offs: dict[int, int]) -> None
         if not nm or not fm:
             raise PdfParseError("ObjStm without /N or /First")
         n, first = int(nm.group(1)), int(fm.group(1))
-        try:
-            raw = zlib.decompress(_stream_of(body))
-        except zlib.error as e:
-            raise PdfParseError(f"bad ObjStm stream: {e}") from e
+        raw = _inflate(body, "ObjStm")
         head = raw[:first].split()
         if len(head) < 2 * n:
             raise PdfParseError("short ObjStm header")
@@ -436,16 +452,17 @@ def _decode_xref_stream(body: bytes) -> dict[int, tuple[int, int, int]]:
         raise PdfParseError("xref stream without /W or /Size")
     w = [int(x) for x in wm.group(1).split()]
     cols = sum(w)
-    try:
-        raw = zlib.decompress(_stream_of(body))
-    except zlib.error as e:
-        raise PdfParseError(f"bad xref stream: {e}") from e
+    raw = _inflate(body, "xref")
+    # /W comes from the payload: check it against the inflated bytes before
+    # anything is sized by it
+    if cols > len(raw):
+        raise PdfParseError("xref /W wider than its stream")
     pm = re.search(rb"/Predictor (\d+)", body)
     if pm and int(pm.group(1)) >= 10:
-        out = bytearray()
-        prev = bytes(cols)
         if len(raw) % (cols + 1):
             raise PdfParseError("ragged predicted xref rows")
+        out = bytearray()
+        prev = bytes(cols)
         for i in range(0, len(raw), cols + 1):
             ft, enc = raw[i], raw[i + 1 : i + 1 + cols]
             if ft == 0:
@@ -519,10 +536,15 @@ def parse_pdf(data: bytes) -> ParsedDoc:
     dict-index raise bare ValueError/KeyError), and an untyped exception
     inside mapInPandas would fail the Spark TASK — killing the other
     thousands of rows in the batch — instead of counting one error row.
+    ``MemoryError`` is the exception: running out of memory says nothing
+    about the payload, so it propagates rather than being counted as a
+    malformed pdf. Sizes the payload declares (inflated stream length,
+    xref ``/W``) are checked before anything is allocated from them, so a
+    hostile file still raises PdfParseError rather than MemoryError.
     """
     try:
         return _parse_pdf_inner(data)
-    except PdfParseError:
+    except (PdfParseError, MemoryError):
         raise
     except Exception as e:  # typed wrapper, never a task-killing escape
         raise PdfParseError(f"malformed pdf ({type(e).__name__}: {e})") from e

@@ -25,7 +25,8 @@ from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from .config import DEFAULT_CONFIG, ExtractConfig
-from .pipeline import TRANSCRIPT_SPARK_SCHEMA, extract_turns
+from .pipeline import extract_turns
+from .sources import TRANSCRIPT_SPARK_SCHEMA, read_payload
 
 __all__ = [
     "with_bucket",
@@ -125,9 +126,9 @@ def run_job(
     lineage anti-join; partially-written buckets (data files without a
     lineage row) are atomically rewritten by dynamic partition overwrite.
 
-    Runs under a per-job session (``pipeline.job_session``): the scan
-    sizing and the dynamic-overwrite mode live in the job's own SQLConf,
-    so the caller's session is never mutated.
+    Runs under the per-job session ``sources.read_payload`` scans with:
+    the scan sizing lives in the job's own SQLConf and dynamic overwrite
+    is a write option, so the caller's session is never mutated.
 
     Reassembly is bucket-aligned (``cluster_by_bucket``): one hash
     exchange on the lineage bucket key serves the window AND the bucketed
@@ -135,13 +136,8 @@ def run_job(
     a persist + sampling pass for a global order the ``partitionBy``
     write discards anyway.
     """
-    from .pipeline import job_session, scan_plan
-
-    cpus = num_partitions or spark.sparkContext.defaultParallelism
-    split, salt = scan_plan(input_path, cpus)
-    spark = job_session(spark, split)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    turns = spark.read.schema(TRANSCRIPT_SPARK_SCHEMA).parquet(input_path)
+    turns, salt = read_payload(spark, input_path, TRANSCRIPT_SPARK_SCHEMA, num_partitions)
+    spark = turns.sparkSession
     turns = with_bucket(turns, n_buckets)
 
     done = committed_buckets(spark, lineage_path, snapshot_id)
@@ -150,7 +146,12 @@ def run_job(
     extracted = extract_turns(todo.drop("bucket"), cfg, salt=salt)
     result = cluster_by_bucket(extracted, n_buckets, num_partitions)
 
-    result.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
+    (
+        result.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(output_path)
+    )
 
     out = spark.read.parquet(output_path)
     out = out.join(F.broadcast(done), "bucket", "left_anti")

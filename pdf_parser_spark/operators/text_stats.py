@@ -141,13 +141,6 @@ def lang_id(text_col: Column) -> Column:
     )
 
 
-def sum_cols(cols: list[Column]) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out + c
-    return out
-
-
 def quality_score(text_col: Column) -> Column:
     """Heuristic quality in [0,1]: length band + space ratio + alpha ratio.
 

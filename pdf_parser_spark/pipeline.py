@@ -1,6 +1,7 @@
 """The Spark extraction pipeline (SURVEY.md §3.4 target lifecycle).
 
-    read transcripts (conv_id, turn_idx, role, text, tool, ts)
+    read transcripts (conv_id, turn_idx, role, text, tool, ts) through
+      sources.read_payload (per-job split size + salt verdict)
       → [resume anti-join — see lineage.py]
       → mapInPandas(extract kernel) DIRECTLY on scan partitions — ONE
         Arrow-batched Python crossing; all per-payload work (sniff, html
@@ -28,8 +29,6 @@ Scale notes (100 TB / 1000 executors):
 """
 from __future__ import annotations
 
-import os
-import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -40,17 +39,15 @@ from pyspark.sql import types as T
 
 from .config import DEFAULT_CONFIG, ExtractConfig
 from .kernels.extract import extract_batch
+from .sources import TRANSCRIPT_SPARK_SCHEMA, read_payload
 
 __all__ = [
     "SPANS_TYPE",
     "RESULT_SCHEMA",
     "session_defaults",
-    "sniff_kind_col",
     "extract_turns",
     "extract_with_fallback",
     "reassemble",
-    "scan_plan",
-    "job_session",
     "run_extraction",
 ]
 
@@ -61,17 +58,6 @@ SPANS_TYPE = T.ArrayType(
             T.StructField("end", T.IntegerType(), False),
         ]
     )
-)
-
-TRANSCRIPT_SPARK_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-    ]
 )
 
 RESULT_SCHEMA = T.StructType(
@@ -119,22 +105,6 @@ def session_defaults(builder, cpus: int | None = None):
     return b
 
 
-def sniff_kind_col(text_col: str = "text"):
-    """JVM-side payload-kind sniff (coarse: html/pdf/plain/error).
-
-    Mirrors kernels.extract.sniff_kind so cheap stats/pruning never cross
-    into Python (Catalyst can push/fold this; the fine pdf subtype needs the
-    kernel). 'JVBERi0' is base64('%PDF-').
-    """
-    c = F.ltrim(F.col(text_col))
-    return (
-        F.when(F.col(text_col).isNull() | (F.col(text_col) == ""), F.lit("error"))
-        .when(c.startswith("<"), F.lit("html"))
-        .when(c.startswith("JVBERi0"), F.lit("pdf"))
-        .otherwise(F.lit("plain"))
-    )
-
-
 def _kernel_factory(cfg: ExtractConfig, keep_payload: bool):
     out_cols = [f.name for f in RESULT_SCHEMA.fields]
     if keep_payload:
@@ -157,8 +127,8 @@ def extract_turns(
     """transcripts DataFrame → extraction results (unordered).
 
     The kernel runs on scan partitions directly: extraction is stateless
-    per turn and ``spark.sql.files.maxPartitionBytes`` (16 MB, see
-    session_defaults) bounds per-task payload, so hot-conversation skew
+    per turn and ``spark.sql.files.maxPartitionBytes`` (at most 16 MB, see
+    session_defaults and sources.read_payload) bounds per-task payload, so hot-conversation skew
     (BASELINE.json:14) is already capped by split granularity — no
     conversation can pin a task to more than one split's bytes.
 
@@ -168,9 +138,9 @@ def extract_turns(
     opt-in: for sources whose per-ROW kernel cost is skewed enough that
     byte-balanced splits still produce unbalanced tasks, and for inputs
     too small to fill one wave of cores even at the floor split size
-    (``run_extraction``/``run_job`` choose it automatically via
-    ``scan_plan`` — never at production scale, and never when the input
-    size is unknown).
+    (``run_extraction``/``run_job`` take it from ``sources.read_payload``
+    — never at production scale, and never when the input size is
+    unknown).
     """
     from . import ship_package
 
@@ -280,123 +250,6 @@ def extract_with_fallback(
     return ok_rows.unionByName(rescued).unionByName(kept_err)
 
 
-_SPLIT_MAX = 16 * 1024 * 1024  # session default; see session_defaults
-_SPLIT_MIN = 4 * 1024 * 1024
-_SPLIT_WAVES = 3  # target kernel waves per core — smooths split-size variance
-
-
-_URI_SCHEME_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://?")
-
-
-def _input_bytes(path: str) -> int:
-    """Total data bytes of a LOCAL input path; **-1 when unknown** (non-file
-    URI scheme — s3://, s3a://, hdfs://, abfs://, … — or a path the driver
-    cannot stat). Callers must treat unknown as *large*: the r04 verdict's
-    one scale hazard was this function returning 0 for object-store paths,
-    which flipped ``plan_scan`` into salting — a full-payload shuffle of the
-    100 TB corpus at exactly the scale where the salt must never fire."""
-    m = _URI_SCHEME_RE.match(path)
-    if m:
-        if m.group(1).lower() != "file":
-            return -1
-        path = path[m.end():] or "/"
-        if not path.startswith("/"):
-            path = "/" + path
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    if not os.path.isdir(path):
-        return -1
-    total = 0
-    for root, _, files in os.walk(path):
-        for name in files:
-            if not name.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, name))
-    return total
-
-
-def adaptive_split_bytes(total_bytes: int, cpus: int) -> int:
-    """Job-level ``spark.sql.files.maxPartitionBytes`` for a payload scan.
-
-    The kernel runs on scan partitions (extract_turns), so scan-split
-    granularity IS kernel task granularity. Byte-splitting quantizes: a
-    211 MB corpus under the 16 MB session default yields 13 tasks — 1.6
-    waves over 8 cores with a 5-task straggler wave, up to ~20% idle tail
-    that the retired pre-kernel salt shuffle used to rebalance (measured:
-    the r04 2->8 scaling dip). Sizing splits to ~3 waves per core
-    restores balance WITHOUT reintroducing a payload shuffle.
-
-    At production scale this is a no-op: total/(3*cpus) for 100 TB on any
-    real cluster is far above the 16 MB cap, so the session default rules
-    and the only effect is at bench/test scale where the input is small
-    relative to the core count. Floor of 4 MB keeps per-task fixed costs
-    (python worker handshake, Arrow setup) amortized.
-    """
-    if cpus <= 0:
-        return _SPLIT_MAX
-    return int(min(_SPLIT_MAX, max(_SPLIT_MIN, total_bytes // (_SPLIT_WAVES * cpus) + 1)))
-
-
-def scan_plan(input_path: str, cpus: int) -> tuple[int, bool]:
-    """PURE scan-sizing decision for the kernel stage: returns
-    ``(split_bytes, salt)``. No session state is touched — apply the split
-    via ``job_session`` (per-job SQLConf), never by mutating a shared conf.
-
-    ``split_bytes`` comes from ``adaptive_split_bytes``. ``salt`` is True
-    iff even floor-sized splits cannot fill ONE wave of cores: then the
-    input is small enough that a balancing shuffle costs less than the idle
-    cores it removes (measured: the 53 MB bench corpus is 13 floor splits
-    over 32 cores; salting restored 22.4k -> 32k turns/s). Never true at
-    production scale, where splits outnumber cores by orders of magnitude
-    and the shuffle would move the full corpus over the network.
-
-    Unknown input size (object-store URI, unstat-able path) is treated as
-    PRODUCTION-LARGE: session-default splits, salt **False**. The failure
-    mode this guards: ``_input_bytes`` returning 0 for ``s3://`` would
-    otherwise flip ``salt=True`` and shuffle the entire corpus — the exact
-    pass the extract-on-scan design removed (r04 verdict, "What's wrong"
-    #1). Reading true sizes via the Hadoop FS API is possible but buys
-    nothing: any corpus big enough to live on an object store is far past
-    the one-wave threshold by construction."""
-    total = _input_bytes(input_path)
-    if total < 0:
-        return _SPLIT_MAX, False
-    split = adaptive_split_bytes(total, cpus)
-    return split, total // split + 1 < cpus
-
-
-def job_session(spark: SparkSession, split_bytes: int | None = None) -> SparkSession:
-    """Per-JOB session: shared SparkContext + cache manager, isolated
-    SQLConf (``SparkSession.newSession``) — Spark's idiomatic mechanism for
-    scoping an execution-time conf to one job.
-
-    ``spark.sql.files.maxPartitionBytes`` is read when the scan *executes*,
-    not when the DataFrame is built (verified empirically: a DataFrame
-    built under a 64 KB conf re-plans with whatever the session holds at
-    action time). A lazy API therefore cannot set-and-restore a shared
-    session's conf; instead every job plans against its own session, so
-    two jobs built concurrently in one application each execute under
-    their own split sizing, and the caller's session is never mutated
-    (r04 ADVICE #2: cross-contamination of the salt/split decision).
-
-    The caller's *runtime* ``spark.sql.*`` tuning is cloned in (newSession
-    only inherits builder-time conf); cloning failures (e.g. a Connect
-    backend without the JVM accessor) degrade to builder-time defaults.
-    """
-    s2 = spark.newSession()
-    try:
-        it = spark._jsparkSession.sessionState().conf().getAllConfs().iterator()
-        while it.hasNext():
-            e = it.next()
-            k, v = e._1(), e._2()
-            if k.startswith("spark.sql.") and s2.conf.isModifiable(k):
-                s2.conf.set(k, v)
-    except Exception:
-        pass
-    if split_bytes is not None:
-        s2.conf.set("spark.sql.files.maxPartitionBytes", str(int(split_bytes)))
-    return s2
-
-
 def run_extraction(
     spark: SparkSession,
     input_path: str,
@@ -405,12 +258,9 @@ def run_extraction(
 ) -> DataFrame:
     """Read → extract → reassemble. Write/lineage live in lineage.py.
 
-    The returned DataFrame is bound to a per-job session (``job_session``)
-    carrying this input's scan sizing; the caller's session conf is never
-    touched, so concurrent jobs in one application can't inherit another
-    input's tuning."""
-    cpus = num_partitions or spark.sparkContext.defaultParallelism
-    split, salt = scan_plan(input_path, cpus)
-    s = job_session(spark, split)
-    df = s.read.schema(TRANSCRIPT_SPARK_SCHEMA).parquet(input_path)
+    The returned DataFrame is bound to the per-job session that
+    ``sources.read_payload`` scans under, carrying this input's split
+    size; the caller's session conf is never touched, so concurrent jobs
+    in one application can't inherit another input's tuning."""
+    df, salt = read_payload(spark, input_path, TRANSCRIPT_SPARK_SCHEMA, num_partitions)
     return reassemble(extract_turns(df, cfg, salt=salt), num_partitions)

@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
-from ..pipeline import TRANSCRIPT_SPARK_SCHEMA, extract_turns
+from ..pipeline import extract_turns
+from ..sources import TRANSCRIPT_SPARK_SCHEMA
 
 
 def incremental_extraction(

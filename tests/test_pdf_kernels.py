@@ -138,6 +138,19 @@ def test_parse_errors():
         parse_pdf(b"%PDF-1.4\ntruncated")
 
 
+def test_parse_pdf_propagates_memory_error(monkeypatch):
+    """Running out of memory is not a malformed payload: parse_pdf's
+    catch-all must let MemoryError through instead of wrapping it."""
+    from pdf_parser_spark.kernels import pdf_mini
+
+    def oom(data):
+        raise MemoryError("simulated")
+
+    monkeypatch.setattr(pdf_mini, "_parse_pdf_inner", oom)
+    with pytest.raises(MemoryError):
+        parse_pdf(b"%PDF-1.4\n")
+
+
 def test_extract_one_error_paths():
     assert extract_one("")[0] == "error"
     assert extract_one(None)[0] == "error"
@@ -283,16 +296,26 @@ def test_objstm_payload_through_extraction_kernel():
     assert out["15"][2] == out["14"][2]
 
 
-def test_hostile_fixture_taxonomy_buckets():
+def test_hostile_fixture_taxonomy_buckets(monkeypatch):
     """datagen's malformed arm must exercise DISTINCT PdfParseError taxonomy
     buckets end-to-end (r04 verdict task #6): lying xref offsets, corrupted
     ObjStm bytes, nonsense ObjStm header — each a typed failure, each an
-    error row through extract_one (never a task-killing bare exception)."""
+    error row through extract_one (never a task-killing bare exception).
+    Sizes a payload declares (a huge xref /W, a zlib bomb) are hostile
+    vectors too: checked before allocation, never a MemoryError."""
     import base64
+    import zlib as _zlib
 
     from pdf_parser_spark.datagen import _h, _make_malformed
+    from pdf_parser_spark.kernels import pdf_mini
     from pdf_parser_spark.kernels.extract import extract_one
-    from pdf_parser_spark.kernels.pdf_mini import PdfParseError, parse_pdf
+    from pdf_parser_spark.kernels.pdf_mini import (
+        PageSpec,
+        PdfParseError,
+        TextRun,
+        build_pdf,
+        parse_pdf,
+    )
 
     by_variant = {}
     for d in range(600):
@@ -313,6 +336,27 @@ def test_hostile_fixture_taxonomy_buckets():
         if v in want:
             with pytest.raises(PdfParseError, match=want[v]):
                 parse_pdf(base64.b64decode(payload))
+
+    base = build_pdf(
+        [PageSpec(text_runs=[TextRun(x=72, y=700, size=10, text="hello world")])],
+        objstm=True,
+    )
+    assert b"/W [1 4 2]" in base and b"/Predictor 12" in base
+    wide = base.replace(b"/W [1 4 2]", b"/W [1000000000000 1 1]")
+    with pytest.raises(PdfParseError, match="xref /W wider than its stream"):
+        parse_pdf(wide)
+
+    # a stream inflating past the cap: shrink the cap rather than build a
+    # real 64 MB bomb
+    monkeypatch.setattr(pdf_mini, "_MAX_INFLATE", 4096)
+    bomb = _zlib.compress(bytes(8192))
+    i = base.index(b"/Type /ObjStm")
+    s = base.index(b"stream\n", i) + len(b"stream\n")
+    e = base.index(b"\nendstream", s)
+    with pytest.raises(PdfParseError, match="ObjStm stream inflates past 4096"):
+        parse_pdf(base[:s] + bomb + base[e:])
+    with pytest.raises(PdfParseError, match="bad ObjStm stream: truncated"):
+        parse_pdf(base[:s] + bomb[: len(bomb) // 2] + base[e:])
 
 
 def test_parse_pdf_never_raises_untyped():

@@ -247,7 +247,7 @@ def test_minhash_verify_uses_doc_level_arrays(spark):
 
 def test_adaptive_split_bytes_policy():
     """Pure-math pins for scan_plan's two decisions (no session needed)."""
-    from pdf_parser_spark.pipeline import adaptive_split_bytes
+    from pdf_parser_spark.sources import adaptive_split_bytes
 
     MB = 1024 * 1024
     # production scale: far above the cap at any real cluster width
@@ -265,7 +265,7 @@ def test_scan_plan_salts_only_underfilled_inputs(transcripts_parquet):
     """The auto-salt fires exactly when floor splits < cores: the sf0.001
     fixture (~1 MB) cannot fill 32 cores (salt), but trivially fills 1
     core-equivalent (no salt at cpus=1). Pure decision — no session."""
-    from pdf_parser_spark.pipeline import scan_plan
+    from pdf_parser_spark.sources import scan_plan
 
     split32, salt32 = scan_plan(transcripts_parquet, 32)
     split1, salt1 = scan_plan(transcripts_parquet, 1)
@@ -281,7 +281,7 @@ def test_scan_plan_object_store_paths_never_salt():
     path) must be treated as PRODUCTION-LARGE — session-default 16 MB
     splits, salt False — never as size-0 (which would re-enable the
     full-payload pre-kernel shuffle at exactly 100 TB scale)."""
-    from pdf_parser_spark.pipeline import _SPLIT_MAX, scan_plan
+    from pdf_parser_spark.sources import _SPLIT_MAX, scan_plan
 
     for path in (
         "s3://corpus-bucket/transcripts/",
@@ -299,14 +299,18 @@ def test_scan_plan_object_store_paths_never_salt():
     assert salt is False and split >= 4 * 1024 * 1024
 
 
-def test_run_extraction_leaves_caller_conf_untouched(spark, transcripts_parquet):
+def test_run_extraction_leaves_caller_conf_untouched(spark, transcripts_parquet, tmp_path):
     """Per-job conf isolation (r04 ADVICE #2): run_extraction plans against
     its own job_session, so the caller's maxPartitionBytes is unchanged
     even AFTER materialization — and the job's own session carries the
-    adaptive split."""
+    adaptive split. run_job likewise leaves the caller's split size and
+    partition-overwrite mode as they were (dynamic overwrite is a write
+    option, not session conf)."""
+    from pdf_parser_spark.lineage import run_job
     from pdf_parser_spark.pipeline import run_extraction
 
     before = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    overwrite = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     out = run_extraction(spark, transcripts_parquet, num_partitions=4)
     job_conf = out.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
     assert out.count() > 0  # materialize under the job session
@@ -314,12 +318,20 @@ def test_run_extraction_leaves_caller_conf_untouched(spark, transcripts_parquet)
     assert int(job_conf) >= 4 * 1024 * 1024
     spark.catalog.clearCache()
 
+    r = run_job(
+        spark, transcripts_parquet, str(tmp_path / "out"), str(tmp_path / "lineage"),
+        snapshot_id="conf", run_id="run1", n_buckets=8, num_partitions=4,
+    )
+    assert r["turns"] > 0
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == before
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == overwrite
+
 
 def test_job_session_isolated_and_inherits_runtime_conf(spark):
     """job_session must (a) carry the caller's RUNTIME spark.sql tuning —
     newSession alone only inherits builder-time conf — and (b) keep its
     split-size conf invisible to the caller."""
-    from pdf_parser_spark.pipeline import job_session
+    from pdf_parser_spark.sources import job_session
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")

@@ -58,7 +58,8 @@ def test_stateful_conversation_progress(spark, transcripts_pdf, tmp_path):
     counts in its second-run row."""
     from pyspark.sql import functions as F
 
-    from pdf_parser_spark.pipeline import TRANSCRIPT_SPARK_SCHEMA, extract_turns
+    from pdf_parser_spark.pipeline import extract_turns
+    from pdf_parser_spark.sources import TRANSCRIPT_SPARK_SCHEMA
     from pdf_parser_spark.streaming.stateful import conversation_progress
 
     work = str(tmp_path / "state_stream")
@@ -191,7 +192,7 @@ def test_streaming_exact_dedup_first_arrival_wins(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from pdf_parser_spark.pipeline import TRANSCRIPT_SPARK_SCHEMA
+    from pdf_parser_spark.sources import TRANSCRIPT_SPARK_SCHEMA
     from pdf_parser_spark.streaming.stateful import streaming_exact_dedup
 
     work = str(tmp_path / "dedup_stream")
