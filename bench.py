@@ -25,6 +25,7 @@ computed (a bare count() would let Catalyst prune the expensive ones).
 """
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -67,21 +68,30 @@ _ID_COLS = {"documents": "doc_id", "embeddings": "vec_id"}
 def ensure_scaled_dir(sf_dir: str, mult: int) -> str:
     """A table dir with documents/embeddings replicated ``mult``-fold
     (id offset 10^7 per replica — clear of the +10^6 doubled-copy ids the
-    dedup queries add) and every other table symlinked unchanged."""
+    dedup queries add) and every other table symlinked unchanged.
+
+    The directory name carries a fingerprint of every source parquet's
+    size and mtime, so a regenerated sf dir builds a fresh copy instead of
+    reusing a stale one."""
     import pyarrow.parquet as pq
     import pyarrow as pa
     import pandas as pd
 
     from pdf_parser_spark import golden as G
 
-    out = os.path.join(G.CACHE_DIR, f"tables_{G.sf_tag(sf_dir)}_x{mult}")
+    names = sorted(n for n in os.listdir(sf_dir) if n.endswith(".parquet"))
+    fp = hashlib.md5()
+    for name in names:
+        st = os.stat(os.path.join(sf_dir, name))
+        fp.update(f"{name}:{st.st_size}:{st.st_mtime_ns};".encode())
+    out = os.path.join(
+        G.CACHE_DIR, f"tables_{G.sf_tag(sf_dir)}_x{mult}_{fp.hexdigest()[:12]}"
+    )
     done = os.path.join(out, "_SCALED_OK")
     if os.path.exists(done):
         return out
     os.makedirs(out, exist_ok=True)
-    for name in sorted(os.listdir(sf_dir)):
-        if not name.endswith(".parquet"):
-            continue
+    for name in names:
         src = os.path.join(sf_dir, name)
         dst = os.path.join(out, name)
         table = name[: -len(".parquet")]

@@ -113,8 +113,12 @@ def _entity_char(m: re.Match) -> str:
     cp = int(dec, 10) if dec is not None else int(hexa, 16)
     if cp in _C1_WINDOWS_1252:
         return _C1_WINDOWS_1252[cp]
-    if cp == 0 or 0xD800 <= cp <= 0xDFFF or cp > 0x10FFFF:
-        return m.group(0)  # spec says U+FFFD; literal is safer for spans
+    # NUL, surrogates and out-of-range: spec says U+FFFD; literal is safer
+    # for spans. Other C0 controls but tab/newline stay literal too: a
+    # decoded &#31; would inject the unit separator the __spark_entry__
+    # digest joins fields with.
+    if (cp < 0x20 and cp not in (0x09, 0x0A)) or 0xD800 <= cp <= 0xDFFF or cp > 0x10FFFF:
+        return m.group(0)
     return chr(cp)
 
 

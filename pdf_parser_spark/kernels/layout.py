@@ -7,150 +7,111 @@ grouping, ``pdf_api/core/pdf_analyzer.py:72``) and PyMuPDF's
 the north_star ("pdfminer-style layout analysis: char→word→line→block
 grouping by bbox clustering, reading-order sort").
 
+The kernel works on a page's char columns (``ParsedPage``) with numpy; no
+Python object is built per char:
+
+1. reading sort: ``lexsort`` on (-y0, x0, index);
+2. lines: walking that order, a char joins the current line while
+   ``|y0 - line's first y0| <= line_merge_tol_ratio * size`` (a sequential
+   rule, run over plain float lists);
+3. within lines: one stable ``lexsort`` on (line, x0, byte_off); per-line
+   bounds by ``reduceat``;
+4. words: a gap ``x0 - prev x1 > word_gap_ratio * size`` inserts one
+   synthetic space unless the previous char is a space;
+5. blocks: a new block starts where the previous line's bottom is more than
+   ``block_gap_ratio * (line's max size)`` above this line's top; blocks
+   are ordered by (-top, left), ties in construction order.
+
 Determinism contract (SURVEY.md §7.3): all thresholds are exact float64
 comparisons on writer-controlled coordinates (integers and 0.5 multiples);
 sorts use total keys with original-index tie-breakers; text assembly is pure
-integer/string ops. The same function runs in the golden pytest harness and
-inside the Spark Arrow kernel.
+integer/byte ops with one latin-1 decode per page. The same function runs in
+the golden pytest harness and inside the Spark Arrow kernel.
 """
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import numpy as np
 
-from .pdf_mini import ParsedChar, ParsedPage
+from .pdf_mini import ParsedPage
 from ..config import ExtractConfig, DEFAULT_CONFIG
 
-__all__ = ["LayoutBlock", "layout_page", "layout_text_and_offsets"]
+__all__ = ["layout_page", "layout_text_and_offsets"]
+
+_SPACE = 0x20
+_NEWLINE = 0x0A
 
 
-@dataclass
-class LayoutLine:
-    chars: list[ParsedChar]
-    y0: float
-    y1: float
-    x0: float
-
-
-@dataclass
-class LayoutBlock:
-    lines: list[LayoutLine] = field(default_factory=list)
-    x0: float = 0.0
-    y0: float = 0.0
-    x1: float = 0.0
-    y1: float = 0.0
-
-    @property
-    def text(self) -> str:
-        return "\n".join(_line_text(ln)[0] for ln in self.lines)
-
-
-def _line_text(line: LayoutLine, cfg: ExtractConfig = DEFAULT_CONFIG) -> tuple[str, list[int]]:
-    """Assemble a line's text; returns (text, byte_offset per char or -1).
-
-    Chars are joined left-to-right; a gap > word_gap_ratio*size between
-    consecutive chars inserts a single synthetic space (offset -1 — synthetic
-    chars carry no span).
-
-    Memoized on the line (classification and extraction both assemble the
-    same lines; see layout_page).
-    """
-    cached = getattr(line, "_text_cache", None)
-    if cached is not None and cached[0] is cfg:
-        return cached[1]
-    parts: list[str] = []
-    offs: list[int] = []
-    prev: ParsedChar | None = None
-    for ch in line.chars:
-        if prev is not None and (ch.x0 - prev.x1) > cfg.word_gap_ratio * ch.size:
-            if parts and parts[-1] != " ":
-                parts.append(" ")
-                offs.append(-1)
-        parts.append(ch.char)
-        offs.append(ch.byte_off)
-        prev = ch
-    # trim trailing synthetic space
-    while parts and parts[-1] == " " and offs[-1] == -1:
-        parts.pop()
-        offs.pop()
-    result = ("".join(parts), offs)
-    line._text_cache = (cfg, result)
-    return result
-
-
-def _group_lines(chars: list[ParsedChar], cfg: ExtractConfig) -> list[LayoutLine]:
-    if not chars:
-        return []
-    # cluster by baseline y (descending = top of page first, y-up coords)
-    order = sorted(range(len(chars)), key=lambda i: (-chars[i].y0, chars[i].x0, i))
-    lines: list[LayoutLine] = []
-    cur: list[ParsedChar] = []
-    cur_y = None
-    for i in order:
-        ch = chars[i]
-        if cur_y is None or abs(ch.y0 - cur_y) <= cfg.line_merge_tol_ratio * ch.size:
-            cur.append(ch)
-            if cur_y is None:
-                cur_y = ch.y0
-        else:
-            lines.append(_mk_line(cur))
-            cur = [ch]
-            cur_y = ch.y0
-    if cur:
-        lines.append(_mk_line(cur))
-    return lines
-
-
-def _mk_line(chs: list[ParsedChar]) -> LayoutLine:
-    chs = sorted(chs, key=lambda c: (c.x0, c.byte_off))
-    return LayoutLine(
-        chars=chs,
-        y0=min(c.y0 for c in chs),
-        y1=max(c.y1 for c in chs),
-        x0=min(c.x0 for c in chs),
-    )
-
-
-def layout_page(page: ParsedPage, cfg: ExtractConfig = DEFAULT_CONFIG) -> list[LayoutBlock]:
-    """Group a page's chars into reading-ordered blocks.
+def layout_page(page: ParsedPage, cfg: ExtractConfig = DEFAULT_CONFIG) -> list[str]:
+    """A page's block texts in reading order (lines joined by newline).
 
     Memoized on the page object (identity-keyed on cfg): classification
     (``_page_text_len``) and extraction (``layout_text_and_offsets``) both
     need the layout of the same parsed page — without the cache every
-    pdf_text/digital turn paid for layout twice (measured 2x kernel cost).
-    Pure caching; results are immutable downstream.
+    pdf_text/digital turn paid for layout twice. Pure caching; results are
+    immutable downstream.
     """
     cached = getattr(page, "_layout_cache", None)
     if cached is not None and cached[0] is cfg:
         return cached[1]
-    lines = _group_lines(page.chars, cfg)
-    # lines already ordered top-to-bottom; split into blocks on big gaps
-    blocks: list[LayoutBlock] = []
-    cur: list[LayoutLine] = []
-    for ln in lines:
-        if cur:
-            gap = cur[-1].y0 - ln.y1  # bottom of prev line to top of this one
-            size = max(c.size for c in ln.chars)
-            if gap > cfg.block_gap_ratio * size:
-                blocks.append(_mk_block(cur))
-                cur = []
-        cur.append(ln)
-    if cur:
-        blocks.append(_mk_block(cur))
-    # reading order: top-to-bottom, then left-to-right (stable tie-break by
-    # construction order)
-    blocks.sort(key=lambda b: (-b.y1, b.x0))
+    blocks = _layout_blocks(page, cfg)
     page._layout_cache = (cfg, blocks)
     return blocks
 
 
-def _mk_block(lines: list[LayoutLine]) -> LayoutBlock:
-    return LayoutBlock(
-        lines=lines,
-        x0=min(ln.x0 for ln in lines),
-        y0=min(ln.y0 for ln in lines),
-        x1=max(max(c.x1 for c in ln.chars) for ln in lines),
-        y1=max(ln.y1 for ln in lines),
-    )
+def _layout_blocks(page: ParsedPage, cfg: ExtractConfig) -> list[str]:
+    n = len(page.text)
+    if not n:
+        return []
+    x0, x1, y0, size = page.x0, page.x1, page.y0, page.size
+
+    # lines: clustered by baseline walking top-to-bottom (y-up coords);
+    # lexsort is stable, so exact (-y0, x0) ties stay in index order
+    order = np.lexsort((x0, -y0))
+    ys = y0[order].tolist()
+    tols = (cfg.line_merge_tol_ratio * size[order]).tolist()
+    starts = [0]
+    cur_y = ys[0]
+    for j in range(1, n):
+        if not abs(ys[j] - cur_y) <= tols[j]:
+            starts.append(j)
+            cur_y = ys[j]
+    line_of = np.zeros(n, np.int64)
+    line_of[starts] = 1
+    # chars left-to-right within each line; exact (x0, byte_off) ties keep
+    # the reading-sort order
+    perm = order[np.lexsort((page.byte_off[order], x0[order], np.cumsum(line_of)))]
+
+    px0, px1, py0, psize = x0[perm], x1[perm], y0[perm], size[perm]
+    ln_y0 = np.minimum.reduceat(py0, starts)
+    ln_y1 = np.maximum.reduceat(py0 + psize, starts)
+    ln_x0 = np.minimum.reduceat(px0, starts)
+    ln_size = np.maximum.reduceat(psize, starts)
+
+    # blocks: gap from the previous line's bottom to this line's top
+    split = (ln_y0[:-1] - ln_y1[1:]) > cfg.block_gap_ratio * ln_size[1:]
+    blk_line = [0] + (np.flatnonzero(split) + 1).tolist()
+    first = [starts[i] for i in blk_line]
+
+    # per-char separator before it: synthetic space inside a line, newline
+    # between the lines of a block, nothing at a block start
+    codes = np.frombuffer(page.text, np.uint8)[perm]
+    sep = np.zeros(n, np.uint8)
+    sep[1:][((px0[1:] - px1[:-1]) > cfg.word_gap_ratio * psize[1:])
+            & (codes[:-1] != _SPACE)] = _SPACE
+    sep[starts] = _NEWLINE
+    sep[first] = 0
+    has_sep = sep != 0
+    pos = np.cumsum(has_sep) + np.arange(n)
+    buf = np.empty(int(pos[-1]) + 1, np.uint8)
+    buf[pos] = codes
+    buf[pos[has_sep] - 1] = sep[has_sep]
+    text = buf.tobytes().decode("latin-1")
+
+    bounds = pos[first].tolist() + [len(text)]
+    top = np.maximum.reduceat(ln_y1, blk_line)
+    left = np.minimum.reduceat(ln_x0, blk_line)
+    reading = np.lexsort((left, -top)).tolist()  # stable: ties keep build order
+    return [text[bounds[b]:bounds[b + 1]] for b in reading]
 
 
 def layout_text_and_offsets(
@@ -159,46 +120,23 @@ def layout_text_and_offsets(
     """Full-document reading-order text + merged byte spans + block count.
 
     Returns (text, [(byte_start, byte_end) ranges into the raw PDF bytes,
-    merged and ordered], n_blocks). Pages joined by a blank line; blocks
-    joined by a blank line; lines by newline.
+    merged and ordered], n_blocks). Blocks — within a page and across
+    pages — are joined by a blank line, lines by newline. Every char lands
+    in the text, so the ranges are the runs of consecutive values in the
+    sorted distinct byte offsets of all pages' chars.
     """
-    out_parts: list[str] = []
-    byte_ranges: list[tuple[int, int]] = []
-    n_blocks = 0
+    blocks: list[str] = []
     for page in pages:
-        blocks = layout_page(page, cfg)
-        for blk in blocks:
-            n_blocks += 1
-            if out_parts:
-                out_parts.append("\n\n")
-            line_texts: list[str] = []
-            for ln in blk.lines:
-                text, offs = _line_text(ln, cfg)
-                line_texts.append(text)
-                # merge consecutive byte offsets into ranges
-                run_start: int | None = None
-                prev_off: int | None = None
-                for off in offs:
-                    if off < 0:
-                        continue
-                    if run_start is None:
-                        run_start = off
-                    elif off != prev_off + 1:
-                        byte_ranges.append((run_start, prev_off + 1))
-                        run_start = off
-                    prev_off = off
-                if run_start is not None:
-                    byte_ranges.append((run_start, prev_off + 1))
-            out_parts.append("\n".join(line_texts))
-    # merge adjacent/overlapping byte ranges, sorted
-    byte_ranges.sort()
-    merged: list[tuple[int, int]] = []
-    for s, e in byte_ranges:
-        if merged and s <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], e))
-        else:
-            merged.append((s, e))
-    return "".join(out_parts), merged, n_blocks
+        blocks += layout_page(page, cfg)
+    text = "\n\n".join(blocks)
+    offs = np.sort(np.concatenate([p.byte_off for p in pages] or [np.empty(0, np.int64)]))
+    if not len(offs):
+        return text, [], len(blocks)
+    # a run breaks where the next distinct offset is not the next integer
+    brk = (offs[1:] - offs[:-1]) > 1
+    starts = offs[:1].tolist() + offs[1:][brk].tolist()
+    ends = (offs[:-1][brk] + 1).tolist() + [int(offs[-1]) + 1]
+    return text, list(zip(starts, ends)), len(blocks)
 
 
 def byte_ranges_to_base64_spans(

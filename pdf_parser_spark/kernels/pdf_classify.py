@@ -22,7 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from .pdf_mini import ParsedDoc, ParsedPage
-from .layout import layout_page, _line_text
+from .layout import layout_page
 from ..config import ExtractConfig, DEFAULT_CONFIG
 
 __all__ = ["PageStats", "DocStats", "page_stats", "doc_stats", "classify_pdf"]
@@ -53,17 +53,10 @@ class DocStats:
 
 
 def _page_text_len(page: ParsedPage, cfg: ExtractConfig) -> int:
-    # analog of len(page.extract_text() or "") — layout-assembled text length
+    # analog of len(page.extract_text() or "") — layout-assembled text
+    # length (blocks joined by "\n\n"), read off the shared layout memo
     blocks = layout_page(page, cfg)
-    n = 0
-    first = True
-    for blk in blocks:
-        if not first:
-            n += 2  # "\n\n" block joiner
-        first = False
-        line_texts = [_line_text(ln, cfg)[0] for ln in blk.lines]
-        n += sum(len(t) for t in line_texts) + max(0, len(line_texts) - 1)
-    return n
+    return sum(map(len, blocks)) + 2 * max(0, len(blocks) - 1)
 
 
 def page_stats(page: ParsedPage, page_no: int, cfg: ExtractConfig = DEFAULT_CONFIG) -> PageStats:

@@ -12,12 +12,14 @@ scratch:
   a correct xref table, page objects, content streams using only
   ``BT/Tf/Td/Tj/ET`` text ops, ``m/l/re/S/f/c`` path ops and
   ``q/cm/Do/Q`` image placements, plus raw ``/Subtype /Image`` XObjects.
-- ``parse_pdf(data)``: tokenizes that subset back into per-page chars (with
-  bboxes AND absolute byte offsets into ``data`` — the span source), image
-  records (bbox + pixel dims + bytes), and vector-drawing counts.
+- ``parse_pdf(data)``: tokenizes that subset back into per-page char
+  COLUMNS (one latin-1 ``bytes`` of char codes plus float64 bbox and int64
+  absolute byte-offset arrays — the offsets are the span source; no Python
+  object per char), image records (bbox + pixel dims + bytes), and
+  vector-drawing counts.
 
-Both sides are pure Python/stdlib, deterministic, and shared by the datagen,
-the golden runner and the Spark UDF kernels.
+Both sides are pure Python/stdlib + numpy, deterministic, and shared by the
+datagen, the golden runner and the Spark UDF kernels.
 
 Geometry contract (fixed, so layout analysis is exact):
 - MediaBox 0 0 612 792 (y-up, PDF convention).
@@ -29,7 +31,8 @@ from __future__ import annotations
 import re
 import zlib
 from dataclasses import dataclass, field
-from typing import NamedTuple
+
+import numpy as np
 
 CHAR_WIDTH_RATIO = 0.6
 PAGE_W = 612.0
@@ -290,19 +293,6 @@ def _serialize_objstm(objs: list[bytes], catalog_id: int, info_id: int | None) -
 
 # ---------------------------------------------------------------- parser ---
 
-class ParsedChar(NamedTuple):
-    # NamedTuple, not dataclass: chars are the highest-volume objects in the
-    # parse path (~100 per turn) and never mutated; tuple construction is
-    # ~2x cheaper and attribute access equal
-    char: str
-    x0: float
-    y0: float
-    x1: float
-    y1: float
-    size: float
-    byte_off: int     # absolute offset of this char in the raw PDF bytes
-
-
 @dataclass
 class ParsedImage:
     x0: float
@@ -321,9 +311,26 @@ class ParsedImage:
     color_mode: str = "rgb"
 
 
+_NO_F64 = np.empty(0, np.float64)
+_NO_I64 = np.empty(0, np.int64)
+
+
 @dataclass
 class ParsedPage:
-    chars: list[ParsedChar] = field(default_factory=list)
+    """One page; its chars are columns in content-stream order.
+
+    ``text[i]`` is char i's latin-1 code; its bbox is ``x0[i]..x1[i]`` by
+    ``y0[i]..y0[i] + size[i]`` (baseline at y0, y-up) and ``byte_off[i]`` is
+    its absolute offset in the raw PDF bytes (for an escape pair, the
+    backslash's offset).
+    """
+
+    text: bytes = b""
+    x0: np.ndarray = field(default_factory=lambda: _NO_F64)
+    x1: np.ndarray = field(default_factory=lambda: _NO_F64)
+    y0: np.ndarray = field(default_factory=lambda: _NO_F64)
+    size: np.ndarray = field(default_factory=lambda: _NO_F64)
+    byte_off: np.ndarray = field(default_factory=lambda: _NO_I64)
     images: list[ParsedImage] = field(default_factory=list)
     n_lines: int = 0
     n_rects: int = 0
@@ -341,11 +348,15 @@ class ParsedDoc:
     metadata: dict[str, str] = field(default_factory=dict)
 
 
-_OBJ_RE = re.compile(rb"(\d+) 0 obj\n(.*?)\nendobj\n", re.DOTALL)
+_OBJ_HEAD = re.compile(rb"(\d+) 0 obj\n")
+_OBJ_END = b"\nendobj\n"
 _REF_RE = re.compile(rb"/(\w+) (\d+) 0 R")
 _NUM = rb"(-?\d+(?:\.\d+)?)"
+# one text run: the op prefix, then (lookahead, so the next search resumes
+# right after the '(' exactly as a prefix-only match would) the literal's
+# escape-free head — the whole literal when the byte after it is ')'
 _TEXT_OP = re.compile(
-    rb"BT /F1 " + _NUM + rb" Tf " + _NUM + rb" " + _NUM + rb" Td \(",
+    rb"BT /F1 " + _NUM + rb" Tf " + _NUM + rb" " + _NUM + rb" Td \((?=([^\\)]*))",
 )
 _IMG_OP = re.compile(
     rb"q " + _NUM + rb" 0 0 " + _NUM + rb" " + _NUM + rb" " + _NUM
@@ -360,22 +371,35 @@ class PdfParseError(ValueError):
 def _parse_objects(
     data: bytes,
 ) -> tuple[dict[int, bytes], dict[int, int], dict[int, int]]:
-    """ONE regex pass over the raw bytes -> (id -> body, id -> absolute
-    offset of the body start, id -> absolute offset of the object HEADER).
+    """ONE pass over the raw bytes -> (id -> body, id -> absolute offset of
+    the body start, id -> absolute offset of the object HEADER).
     The body offsets anchor char byte_offs (the span source); the header
     offsets are what xref rows record, kept from the actual match span so
     the xref cross-check never re-derives them from an assumed header
     layout ('N 0 obj\\n' exactly — a spec-valid writer may use \\r\\n or
-    extra spaces). Folding all maps into a single finditer saves a full
-    scan of every payload."""
+    extra spaces).
+
+    Each header is found by regex and its body's end by ``bytes.find`` of
+    the first ``\\nendobj\\n`` after it — the matches of a lazy
+    ``(\\d+) 0 obj\\n(.*?)\\nendobj\\n`` scan (first match, no overlap),
+    without running the regex engine over every body byte. A header with
+    no end marker after it ends the scan: no later header can have one."""
     objs: dict[int, bytes] = {}
     spans: dict[int, int] = {}
     heads: dict[int, int] = {}
-    for m in _OBJ_RE.finditer(data):
+    pos = 0
+    while True:
+        m = _OBJ_HEAD.search(data, pos)
+        if m is None:
+            break
+        end = data.find(_OBJ_END, m.end())
+        if end < 0:
+            break
         oid = int(m.group(1))
-        objs[oid] = m.group(2)
-        spans[oid] = m.start(2)
+        objs[oid] = data[m.end():end]
+        spans[oid] = m.end()
         heads[oid] = m.start()
+        pos = end + len(_OBJ_END)
     if not objs:
         raise PdfParseError("no objects")
     return objs, spans, heads
@@ -504,26 +528,84 @@ def _decode_xref_stream(body: bytes) -> dict[int, tuple[int, int, int]]:
     return entries
 
 
-def _read_literal(data: bytes, start: int) -> tuple[list[tuple[str, int]], int]:
+def _read_literal(data: bytes, start: int) -> tuple[bytes, list[int]]:
     """Read a PDF literal string starting just after '('.
 
-    Returns (list of (char, absolute_byte_offset), index just after ')').
-    Handles the three escapes the writer emits.
+    Returns (char codes, absolute offset per char). Handles the three escapes the writer emits: an escape pair is one char,
+    anchored at its backslash.
     """
-    out: list[tuple[str, int]] = []
+    codes = bytearray()
+    offs: list[int] = []
     i = start
     n = len(data)
     while i < n:
         c = data[i]
         if c == 0x5C and i + 1 < n:  # backslash
-            out.append((chr(data[i + 1]), i))
+            codes.append(data[i + 1])
+            offs.append(i)
             i += 2
         elif c == 0x29:  # ')'
-            return out, i + 1
+            return bytes(codes), offs
         else:
-            out.append((chr(c), i))
+            codes.append(c)
+            offs.append(i)
             i += 1
     raise PdfParseError("unterminated literal")
+
+
+def _text_page(stream: bytes, sbase: int) -> ParsedPage:
+    """A page holding the char columns of a content stream's text runs.
+
+    Geometry follows the monospace contract with the same float operations
+    per char k of a run at (x, y, size): x0 = x + k*cw, x1 = x + (k+1)*cw,
+    cw = CHAR_WIDTH_RATIO*size — done once per page over repeated per-run
+    arrays. An escape-free literal is a slice whose offsets are an arange;
+    only literals containing a backslash are walked byte by byte.
+    """
+    pieces: list[bytes] = []
+    xs: list[float] = []
+    ys: list[float] = []
+    sizes: list[float] = []
+    bases: list[int] = []
+    lens: list[int] = []
+    walked: list[tuple[int, list[int]]] = []  # (first char index, offsets)
+    n_chars = 0
+    n = len(stream)
+    for m in _TEXT_OP.finditer(stream):
+        lit = m.group(4)
+        end = m.end(4)
+        if end < n and stream[end] == 0x29:  # ')': escape-free literal
+            base = sbase + m.end()
+        else:
+            lit, offs = _read_literal(stream, m.end())
+            walked.append((n_chars, offs))
+            base = 0
+        sizes.append(float(m.group(1)))
+        xs.append(float(m.group(2)))
+        ys.append(float(m.group(3)))
+        pieces.append(lit)
+        bases.append(base)
+        lens.append(len(lit))
+        n_chars += len(lit)
+    if not n_chars:
+        return ParsedPage()
+    ln = np.array(lens, np.int64)
+    k = np.arange(n_chars, dtype=np.int64) - np.repeat(np.cumsum(ln) - ln, ln)
+    kf = k.astype(np.float64)
+    x = np.repeat(np.array(xs), ln)
+    size = np.repeat(np.array(sizes), ln)
+    cw = CHAR_WIDTH_RATIO * size
+    byte_off = np.repeat(np.array(bases, np.int64), ln) + k
+    for first, offs in walked:
+        byte_off[first:first + len(offs)] = np.array(offs, np.int64) + sbase
+    return ParsedPage(
+        text=b"".join(pieces),
+        x0=x + kf * cw,
+        x1=x + (kf + 1.0) * cw,
+        y0=np.repeat(np.array(ys), ln),
+        size=size,
+        byte_off=byte_off,
+    )
 
 
 def parse_pdf(data: bytes) -> ParsedDoc:
@@ -601,17 +683,11 @@ def _parse_pdf_inner(data: bytes) -> ParsedDoc:
         ibody = objs.get(int(im.group(1)))
         if ibody is not None:
             for km in re.finditer(rb"/(\w+) \(", ibody):
-                chars, _end = _read_literal(ibody, km.end())
-                doc.metadata[km.group(1).decode("latin-1")] = "".join(
-                    c for c, _ in chars
-                )
+                value, _offs = _read_literal(ibody, km.end())
+                doc.metadata[km.group(1).decode("latin-1")] = value.decode("latin-1")
     for pid in kids_order:
         body = objs[pid]
-        page = ParsedPage()
         mb = re.search(rb"/MediaBox \[0 0 " + _NUM + rb" " + _NUM + rb"\]", body)
-        if mb:
-            page.width = float(mb.group(1))
-            page.height = float(mb.group(2))
         xobj_map: dict[bytes, int] = {}
         xm = re.search(rb"/XObject << (.*?) >>", body)
         if xm:
@@ -625,26 +701,10 @@ def _parse_pdf_inner(data: bytes) -> ParsedDoc:
         stream = _stream_of(cbody)
         # absolute offset of the stream inside `data`
         sbase = offs[cid] + cbody.find(b"stream\n") + len(b"stream\n")
-
-        # text runs
-        for m in _TEXT_OP.finditer(stream):
-            size = float(m.group(1))
-            x = float(m.group(2))
-            y = float(m.group(3))
-            chars, _end = _read_literal(stream, m.end())
-            cw = CHAR_WIDTH_RATIO * size
-            for k, (ch, off) in enumerate(chars):
-                page.chars.append(
-                    ParsedChar(
-                        char=ch,
-                        x0=x + k * cw,
-                        y0=y,
-                        x1=x + (k + 1) * cw,
-                        y1=y + size,
-                        size=size,
-                        byte_off=sbase + off,
-                    )
-                )
+        page = _text_page(stream, sbase)
+        if mb:
+            page.width = float(mb.group(1))
+            page.height = float(mb.group(2))
         # images
         for k, m in enumerate(_IMG_OP.finditer(stream)):
             w = float(m.group(1))

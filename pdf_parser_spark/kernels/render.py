@@ -94,8 +94,13 @@ def render_page(
         if x1 > x0 and ry1 > ry0:
             img[ry0:ry1, x0:x1] = _tile_bytes(im.data, ry1 - ry0, x1 - x0)
     if not text_stripped:
-        for c in page.chars:
-            _fill_rect(img, c.x0, c.y0, c.x1, c.y1, zoom, ph, _TEXT_GRAY)
+        for box in zip(
+            page.x0.tolist(),
+            page.y0.tolist(),
+            page.x1.tolist(),
+            (page.y0 + page.size).tolist(),
+        ):
+            _fill_rect(img, *box, zoom, ph, _TEXT_GRAY)
     return img
 
 

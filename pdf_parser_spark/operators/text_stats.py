@@ -8,6 +8,8 @@ md5-hex prefixes.
 """
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -172,6 +174,20 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
+# one merge-table broadcast per SparkContext: repeated calls (bench trial
+# loops, ingestion schedulers) reuse it instead of piling up JVM blocks
+_BPE_BROADCASTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _bpe_broadcast(sc):
+    bc = _BPE_BROADCASTS.get(sc)
+    if bc is None:
+        from ..kernels.bpe import default_ranks
+
+        bc = _BPE_BROADCASTS[sc] = sc.broadcast(default_ranks())
+    return bc
+
+
 def with_bpe_token_count(
     docs: DataFrame,
     text_col: str = "text",
@@ -194,10 +210,10 @@ def with_bpe_token_count(
     from pyspark.sql import types as T
 
     from .. import ship_package
-    from ..kernels.bpe import count_batch, default_ranks
+    from ..kernels.bpe import count_batch
 
     ship_package(docs.sparkSession)
-    bc = docs.sparkSession.sparkContext.broadcast(default_ranks())
+    bc = _bpe_broadcast(docs.sparkSession.sparkContext)
     schema = T.StructType(
         docs.schema.fields + [T.StructField(out_col, T.IntegerType(), False)]
     )

@@ -764,7 +764,7 @@ def test_bpe_spark_matches_single_node_kernel(spark):
     import os
 
     from pdf_parser_spark.kernels.bpe import count_batch
-    from pdf_parser_spark.operators.text_stats import with_bpe_token_count
+    from pdf_parser_spark.operators.text_stats import _bpe_broadcast, with_bpe_token_count
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(os.path.join(sf, "documents.parquet")).select(
@@ -778,3 +778,14 @@ def test_bpe_spark_matches_single_node_kernel(spark):
     want = dict(zip(pdf["doc_id"], count_batch(pdf["text"])))
     assert got == want
     assert all(v > 0 for v in got.values())
+    # a second call reuses the first call's merge-table broadcast
+    sc = spark.sparkContext
+    bc_id = _bpe_broadcast(sc)._jbroadcast.id()
+    made = []
+    sc.broadcast = made.append  # a new broadcast would land here
+    try:
+        with_bpe_token_count(docs)
+    finally:
+        del sc.broadcast
+    assert made == []
+    assert _bpe_broadcast(sc)._jbroadcast.id() == bc_id

@@ -100,6 +100,10 @@ def test_numeric_and_named_entities_decoded():
         "&amp": "&amp",                  # semicolon required
         "&#0;": "&#0;",                  # out of range stays literal
         "&#xD800;": "&#xD800;",          # surrogate stays literal
+        "&#31;": "&#31;",                # C0 control stays literal
+        "&#x1F;": "&#x1F;",
+        "&#12;": "&#12;",
+        "&#9;": "\t",                    # tab decodes
     }
     for raw, want in cases.items():
         assert _decode_entities(raw) == want, raw

@@ -36,16 +36,16 @@ def test_roundtrip_chars():
     page = _page_with_text([["hello world"], ["second block"]])
     doc = parse_pdf(build_pdf([page]))
     assert len(doc.pages) == 1
-    chars = doc.pages[0].chars
-    assert "".join(c.char for c in chars) == "hello worldsecond block"
+    p = doc.pages[0]
+    assert p.text.decode("latin-1") == "hello worldsecond block"
     # monospace metric: each char advances 6pt at size 10
-    assert chars[1].x0 - chars[0].x0 == pytest.approx(6.0)
+    assert p.x0[1] - p.x0[0] == pytest.approx(6.0)
 
 
 def test_roundtrip_escapes():
     page = PageSpec(text_runs=[TextRun(72, 700, 10, r"a(b)c\d")])
     doc = parse_pdf(build_pdf([page]))
-    assert "".join(c.char for c in doc.pages[0].chars) == r"a(b)c\d"
+    assert doc.pages[0].text.decode("latin-1") == r"a(b)c\d"
 
 
 def test_layout_blocks_and_reading_order():
@@ -53,8 +53,8 @@ def test_layout_blocks_and_reading_order():
     page = parse_pdf(build_pdf([spec])).pages[0]
     blocks = layout_page(page)
     assert len(blocks) == 2
-    assert blocks[0].text == "line one\nline two"
-    assert blocks[1].text == "block two"
+    assert blocks[0] == "line one\nline two"
+    assert blocks[1] == "block two"
 
 
 def test_layout_two_runs_same_line_get_space():
@@ -215,11 +215,11 @@ def test_objstm_layout_parses_identically():
     assert p15.metadata == p14.metadata == info
     assert len(p15.pages) == len(p14.pages)
     for a, b in zip(p14.pages, p15.pages):
-        assert "".join(c.char for c in a.chars) == "".join(c.char for c in b.chars)
+        assert a.text.decode("latin-1") == b.text.decode("latin-1")
         assert [i.data for i in a.images] == [i.data for i in b.images]
         assert (a.n_lines, a.n_rects, a.n_curves) == (b.n_lines, b.n_rects, b.n_curves)
-    ch = p15.pages[0].chars[0]
-    assert d15[ch.byte_off : ch.byte_off + 1] == b"h"
+    off = int(p15.pages[0].byte_off[0])
+    assert d15[off : off + 1] == b"h"
 
 
 def test_xref_stream_decode_and_consistency():

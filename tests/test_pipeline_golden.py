@@ -104,3 +104,30 @@ def test_salting_spreads_hot_conversations(spark, transcripts_parquet):
         assert parts > 1  # hot conversations span multiple tasks pre-reassembly
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+# sha256 of extract_batch over the sf0.1 transcripts (5,000 turns, all 7
+# kinds), computed once and fixed. The goldens above are regenerated by the
+# kernel under test, so they cannot see an output change that both sides
+# make; this constant can.
+SF01_KERNEL_SHA256 = "af0ce5bfb2b3a8c7a9b73673db5f369fef8a21a2db6888a3618083a8ac387ba1"
+
+
+def test_kernel_output_pinned_across_versions():
+    import hashlib
+    import os
+
+    from conftest import SF_SMOKE
+    from pdf_parser_spark.datagen import generate_transcripts
+
+    out = extract_batch(generate_transcripts(os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")))
+    assert len(out) == 5000 and out["payload_kind"].nunique() == 7
+    h = hashlib.sha256()
+    for kind, text, spans, n_blocks, ok in zip(
+        out["payload_kind"], out["extracted_text"], out["spans"],
+        out["n_blocks"], out["extraction_ok"],
+    ):
+        sp = ",".join(f"{d['start']}:{d['end']}" for d in spans)
+        h.update(f"{kind}\x1f{text}\x1f{sp}\x1f{int(n_blocks)}\x1f{bool(ok)}\x1e".encode(
+            "utf-8", "surrogatepass"))
+    assert h.hexdigest() == SF01_KERNEL_SHA256
